@@ -19,10 +19,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from kairos_spark import queries as q
 from kairos_spark.ingest import bucketize
+from kairos_spark.session import local_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -521,17 +522,7 @@ def pipeline_stats(spark, sf_dir):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("kairos_spark-bench")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_builder("kairos_spark-bench", CPUS, "16g").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
 

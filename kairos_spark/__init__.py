@@ -10,7 +10,11 @@ DataFrame aggregations. Storage is raw-append; reads aggregate.
 """
 
 from kairos_spark.exceptions import KairosSparkException, UnknownInterval
-from kairos_spark.session import configured_builder, default_shuffle_partitions
+from kairos_spark.session import (
+    configured_builder,
+    default_shuffle_partitions,
+    local_builder,
+)
 from kairos_spark.timemath import GregorianTime, RelativeTime, resolve_time
 from kairos_spark.timeseries import Timeseries
 
@@ -25,5 +29,6 @@ __all__ = [
     "Timeseries",
     "configured_builder",
     "default_shuffle_partitions",
+    "local_builder",
     "__version__",
 ]

@@ -3515,7 +3515,7 @@ def wilson_ci(
         # k=0 makes center-half a tiny-negative residual: Spark's round
         # drops the zero sign (+0.0) but DuckDB's keeps it (-0.0), so
         # the oracle twin normalizes with `+ 0.0` (signed-zero
-        # invariant, tools/zero_audit.py).
+        # invariant, the NEGZERO check in tools/check_correctness.py).
         F.round(center - half, 6).alias("ci_lo"),
         F.round(center + half, 6).alias("ci_hi"),
     )

@@ -4442,9 +4442,10 @@ def q_quant_bits_sweep(spark, sf_dir):
 
 QUERIES = {
     # NOTE: the driver's CORRECTNESS run evaluates the FIRST 50 entries.
-    # The literal below keeps historical grouping; the AUTHORITATIVE
-    # round-9 window order is _R9_WINDOW after this dict (the dict is
-    # rebuilt from it) — edit THAT list for future rotations.
+    # The literal below keeps historical grouping; the window order is
+    # set by the _R13_WINDOW and then _R14_WINDOW lists after this dict
+    # (each rebuilds it with its 50 names first) — add the next
+    # rotation's list after _R14_WINDOW.
     # --- Round-10 additions (never driver-checked) ---
     "dup_line_stats": q_dup_line_stats,
     "quality_threshold_sweep": q_quality_threshold_sweep,
@@ -4834,307 +4835,8 @@ QUERIES = {
     "mrr_sessions": q_mrr_sessions,
 }
 
-# --- Round-9 driver window (CLAUDE.md rotation rule; the driver's
-# CORRECTNESS run evaluates exactly the FIRST 50 entries of QUERIES).
-# Layout: (1) the 7 NEW r9 queries (never driver-checked); (2) the 19
-# queries whose Spark/oracle expressions CHANGED this round (ADVICE r8
-# cents/lam/hash fixes + the multi-line round_lint sweep) — green
-# locally at sf0.01/sf0.1/adversarial, promoted for driver re-check
-# exactly as r8 did with post_stratified_mean; (3) 24 rotation
-# re-checks continuing the tail cycle (the entries directly after the
-# r8 window, last driver-checked r7). Everything else keeps its
-# previous relative order behind the window and stays covered by the
-# local full-registry mirror.
-_R9_WINDOW = [
-    # (1) new r9
-    "embedding_moments",
-    "paragraph_dedup",
-    "crossdoc_spans",
-    "ppl_bucket_mix",
-    "tokenizer_drift",
-    "eval_contamination",
-    "cluster_keep_best",
-    "cross_source_dup",
-    "dup_cluster_sizes",
-    "template_prefix",
-    # (2) r9 expression changes, promoted for driver re-check
-    "quality_rule_pack",
-    "dsir_weights",
-    "ts_series_transforms_hour",
-    "q1_pricing_summary",
-    "bootstrap_ci_mean",
-    "post_stratified_mean",
-    "boilerplate_chunks",
-    "freq_spectrum",
-    "hashing_trick_audit",
-    "conformal_coverage",
-    "winsorize",
-    "impute_median",
-    "policy_replay",
-    "powerlaw_alpha",
-    "wasserstein_drift",
-    "bm25_topk",
-    "conversion_latency",
-    "interval_proration",
-    "event_study",
-    # wilson_ci oracle gained the signed-zero `+ 0.0` normalization
-    # (the r9 zero_audit finding) — promoted for driver re-check
-    "wilson_ci",
-    # (3) rotation re-checks (last driver-checked r7)
-    "training_data_prep",
-    "minhash_first_hashes",
-    "minhash_lsh_pairs",
-    "simhash_sample",
-    "simhash_near_pairs",
-    "text_stats",
-    "binned_quantiles",
-    "weighted_sample",
-    "pii_scrub",
-    "quality_scores",
-    "lang_id",
-    "token_topk",
-    "doc_fingerprint",
-    "ann_cosine_topk",
-    "label_centroids",
-    "ann_ivf_topk",
-    "embed_near_pairs",
-    "ann_lsh_topk",
-    "frame_sample",
-    "sample_split",
-]
-assert len(_R9_WINDOW) == 50 and len(set(_R9_WINDOW)) == 50
-
-# --- Round-10 driver window (CLAUDE.md rotation rule). Layout:
-# (1) the 9 NEW r10 queries (never driver-checked); (2) the 3 queries
-# whose Spark/oracle expressions CHANGED this round (ADVICE r9 fixes:
-# conversion_latency's exact-integer percentiles changed BOTH sides;
-# tokenizer_drift and embedding_moments moved their overflow-prone
-# products into DECIMAL) — green locally at sf0.01/sf0.1/adversarial,
-# promoted for driver re-check; (3) 38 rotation re-checks continuing
-# the tail cycle from stratified_sample onward (the entries CLAUDE.md
-# queued after the late-r9 additions bumped them). CORRECTNESS_r09
-# came back 50/50, so nothing is red and no slot is owed to a repair.
-_R10_WINDOW = [
-    # (1) new r10 — none of these have ever been driver-checked (the
-    # r10 driver run happens at round end); late additions included so
-    # the whole batch gets checked this round
-    "dup_line_stats",
-    "quality_threshold_sweep",
-    "blocklist_audit",
-    "contamination_spans",
-    "boundary_overlap",
-    "pipeline_roi",
-    "cluster_balanced_sample",
-    "ivf_list_balance",
-    "cluster_keep_best_lsh",
-    "dup_quality_bias",
-    "cluster_source_purity",
-    "bigram_entropy_rate",
-    "script_mix",
-    "cramers_v",
-    "fim_split_audit",
-    "rp_distortion",
-    "ivf_probe_sweep",
-    "shard_dup_locality",
-    "quant_recall",
-    "frame_dup_rate",
-    "byte_entropy",
-    "cluster_quality_bias",
-    "rule_disagreement",
-    "kendall_tau",
-    "source_kl",
-    "l_diversity",
-    # (2) r10 expression changes, promoted for driver re-check
-    # (conversion_latency/tokenizer_drift/embedding_moments: ADVICE r9;
-    # lateness_audit/theilsen_trend + the already-tail-listed
-    # interarrival: the r10 percentile-midpoint sweep — the last two
-    # displaced ts_count_rate_minute / ts_fine_hour_minute, which now
-    # lead the r11 tail cycle)
-    "conversion_latency",
-    "tokenizer_drift",
-    "embedding_moments",
-    "lateness_audit",
-    "theilsen_trend",
-    # (3) rotation re-checks (tail cycle)
-    "stratified_sample",
-    "session_transitions",
-    "doc_chunks",
-    "inverted_index",
-    "heavy_hitters",
-    "bloom_filter_join",
-    "salted_join",
-    "unpivot_roundtrip",
-    "cluster_quality",
-    "pagerank_transitions",
-    "asof_tolerance",
-    "pmi_pairs",
-    "value_drift",
-    "period_delta",
-    "zorder_layout",
-    "minhash_calibration",
-    "knn_join",
-    "lsh_recall",
-    "interarrival",
-]
-assert len(_R10_WINDOW) == 50 and len(set(_R10_WINDOW)) == 50
-
-# --- Round-11 driver window (CLAUDE.md rotation rule). Layout:
-# (1) the 7 NEW r11 queries (never driver-checked); (2) the 19
-# late-r10 entries that have never been in a driver window (VERDICT
-# r10 #1 — the only registry entries whose driver-green status is
-# inherited from the mirror rather than observed; restores "every
-# registered query driver-checked at least once" when green);
-# (3) the 2 r10-checked entries whose expressions CHANGED this round
-# (ADVICE r10 signed-zero fixes: period_delta's oracle gained the
-# `+ 0.0` CASE normalization and its Spark side changed through
-# _round6_ratio_signed; theilsen_trend's slope routes through the
-# changed _round6_ratio_dec_signed) — mirror-green ×3, promoted for
-# driver re-check per the r8/r10 precedent. cuped_adjustment /
-# hll_union_overlap / cluster_diameter / dup_degree_spectrum also
-# changed this round but already sit in group (2). The OTHER formal
-# helper-change owners (rfm_segments, bootstrap_ci_mean,
-# post_stratified_mean, langid_kappa, embedding_moments,
-# rp_distortion, ts_series_transforms_hour, json_props_stats) are
-# identity-changed off the zero window, re-verified by the full
-# mirror, and stay in the tail cycle; (4) 22 rotation re-checks
-# continuing the tail cycle exactly as CLAUDE.md queued it (the 17
-# displaced re-checks, the 2 earlier-displaced ts_* rows, then the
-# oldest-driver-checked block; crosscorr_types rolled to r12 when
-# near_dup_family_agreement joined group 1).
-_R11_WINDOW = [
-    # (1) new r11
-    "char_rep_rate",
-    "url_dedup",
-    "doc_disposition",
-    "knn_stability",
-    "bloom_fpr_audit",
-    "cross_shard_novelty",
-    "near_dup_family_agreement",
-    # (2) never-driver-checked late-r10 entries
-    "embedding_anisotropy",
-    "doc_gini",
-    "cohens_d",
-    "code_detect",
-    "cuped_adjustment",
-    "cluster_diameter",
-    "hll_union_overlap",
-    "order_count_histogram",
-    "qte_deciles",
-    "vocab_partial_corr",
-    "t_closeness",
-    "degree_assortativity",
-    "chunk_overlap",
-    "link_density",
-    "markup_stats",
-    "dup_degree_spectrum",
-    "language_mix",
-    "brier_decomposition",
-    "forecast_mase",
-    # (3) r11 expression-changed promotions
-    "period_delta",
-    "theilsen_trend",
-    # (4) rotation re-checks (tail cycle)
-    "cube_revenue",
-    "mad_outliers",
-    "schema_profile",
-    "fk_conformance",
-    "snapshot_diff",
-    "trend_slope",
-    "fd_check",
-    "event_debounce",
-    "count_correlation",
-    "revenue_deciles",
-    "fuzzy_match",
-    "label_agreement",
-    "interval_coverage",
-    "seasonal_baseline",
-    "key_skew_stats",
-    "event_pivot",
-    "ts_count_series_hour",
-    "ts_count_rate_minute",
-    "ts_fine_hour_minute",
-    "packing_efficiency",
-    "token_budget_alloc",
-    "shard_balance_audit",
-]
-assert len(_R11_WINDOW) == 50 and len(set(_R11_WINDOW)) == 50
-
-# --- Round-12 driver window (CLAUDE.md rotation rule; _R11_WINDOW
-# above is historical record). Layout:
-# (1) the 10 NEW r12 queries (never driver-checked);
-# (2) the 2 late-r11 entries registered BEHIND the r11 window —
-#     the only registry entries never driver-checked (VERDICT r11 #3);
-# (3) the 8 r11 formal helper-change owners that skipped promotion
-#     (VERDICT r11 "What's missing" #4): their Spark expressions
-#     gained the signed-zero `+ F.lit(0.0)` normalization inside
-#     _round6_ratio_signed/_round6_ratio_dec_signed in r11 — identity
-#     off the zero window and mirror-re-verified + fuzz-pinned, but
-#     the rotation rule says expression-changed entries get a driver
-#     re-check;
-# (4) 30 tail re-checks continuing the oldest-driver-checked r8 block
-#     from crosscorr_types onward in registry order (bootstrap_ci_mean
-#     / post_stratified_mean / json_props_stats fall inside that block
-#     and already sit in group 3, so the block extends past them).
-_R12_WINDOW = [
-    # (1) new r12
-    "minhash_scurve",
-    "boilerplate_roi",
-    "oov_rate",
-    "contamination_matrix",
-    "quant_bits_sweep",
-    "sig_size_sweep",
-    "instruction_detect",
-    "domain_mix",
-    "bpe_merge_candidates",
-    "facility_select",
-    # (2) never-driver-checked late-r11
-    "source_containment",
-    "dup_run_lengths",
-    # (3) r11 signed-zero helper-change owners (driver re-check)
-    "rfm_segments",
-    "bootstrap_ci_mean",
-    "post_stratified_mean",
-    "langid_kappa",
-    "embedding_moments",
-    "rp_distortion",
-    "ts_series_transforms_hour",
-    "json_props_stats",
-    # (4) rotation re-checks (tail cycle from crosscorr_types)
-    "crosscorr_types",
-    "delta_attribution",
-    "bernoulli_ht_audit",
-    "markov_accuracy",
-    "vocab_drift",
-    "seasonal_quantile_bands",
-    "dup_inflation",
-    "ts_multires_rollup",
-    "ts_iterate_full",
-    "repetition_stats",
-    "word_entropy",
-    "contamination",
-    "dedup_incremental",
-    "token_topk_by_lang",
-    "cohort_retention",
-    "embed_near_pairs_lsh",
-    "shard_packing",
-    "sketch_distinct",
-    "kmeans_clusters",
-    "tfidf_top_terms",
-    "bigram_lm_score",
-    "normalize_dedup",
-    "containment_pairs",
-    "anomaly_zscore",
-    "ewma_smooth",
-    "rolling_distinct_users",
-    "funnel_conversion",
-    "q1_pricing_summary",
-    "revenue_by_nation",
-    "window_top_orders",
-]
-assert len(_R12_WINDOW) == 50 and len(set(_R12_WINDOW)) == 50
-
-# --- Round-13 driver window (CLAUDE.md rotation rule; _R12_WINDOW
-# above is historical record). FIRST round whose promotion set is
+# --- Round-13 driver window (CLAUDE.md rotation rule; the r9-r12
+# windows were never applied to QUERIES and are gone). FIRST round whose promotion set is
 # GENERATED by tools/impact_map.py (VERDICT r12 #2) — see
 # PROMOTION_r13.md for the full report. Layout:
 # (1) the 7 NEW r13 queries (never driver-checked);

@@ -1,6 +1,12 @@
 """SparkSession configuration for this engine, one place instead of
 scattered builder chains.
 
+``local_builder`` is the single-machine session every script and the
+test suite start: ``local[cores]``, UTC, ``shuffle.partitions = cores``
+and the UI off. App name, cores and driver memory are the only values
+its callers vary; anything else (an A/B conf, the determinism pass's
+AQE switch) is a ``.config`` on the returned builder.
+
 ``configured_builder`` returns a builder with the settings every
 deployment of this engine wants; callers override per-environment
 (master, memory) and call ``.getOrCreate()``. The defaults are chosen
@@ -48,6 +54,25 @@ def configured_builder(
     )
     if cores:
         b = b.config("spark.sql.shuffle.partitions", str(cores))
+    return b
+
+
+def local_builder(
+    app_name: str,
+    cores: int | str,
+    driver_memory: str | None = None,
+) -> SparkSession.Builder:
+    """Builder for a ``local[cores]`` session with the UTC contract;
+    caller adds overrides and calls getOrCreate()."""
+    b = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName(app_name)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.shuffle.partitions", str(cores))
+        .config("spark.ui.enabled", "false")
+    )
+    if driver_memory:
+        b = b.config("spark.driver.memory", driver_memory)
     return b
 
 

@@ -101,11 +101,9 @@ class _ParquetStore:
 
     def __init__(self, path: str):
         self.path = path
-        self._exists = False
 
     def append_df(self, df: DataFrame):
         df.write.mode("append").partitionBy("interval").parquet(self.path)
-        self._exists = True
 
     def scan(self, spark, schema):
         try:

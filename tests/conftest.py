@@ -5,24 +5,15 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from kairos_spark.session import local_builder
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("kairos_spark-tests")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        # 6g: the suite runs 500+ tests against ONE JVM; iterative
-        # operators cache intermediates and the old 4g ceiling let a
-        # long run stop the SparkContext near the end of the suite
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
-    yield session
+    # 6g: the suite runs 500+ tests against ONE JVM; iterative operators
+    # cache intermediates and the old 4g ceiling let a long run stop the
+    # SparkContext near the end of the suite
+    yield local_builder("kairos_spark-tests", 4, "6g").getOrCreate()
 
 
 @pytest.fixture(autouse=True)

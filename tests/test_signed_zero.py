@@ -21,10 +21,10 @@ Engine-probed facts this suite pins:
   numerator over a NEGATIVE denominator ((a-b)/c with a==b, c<0) is
   ``-0.0`` on both engines; a bare round then splits them.
 
-``tools/zero_audit.py`` checks the resulting no-signed-zero output
-invariant mechanically over the whole registry; this suite keeps the
-underlying engine facts honest so an engine upgrade that shifts any
-of them fails loudly here first.
+The NEGZERO check of ``tools/check_correctness.py`` enforces the
+resulting no-signed-zero output invariant over the whole registry;
+this suite keeps the underlying engine facts honest so an engine
+upgrade that shifts any of them fails loudly here first.
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def test_spark_round_drops_zero_sign(spark):
 
 def test_duckdb_round_keeps_zero_sign(con):
     """Load-bearing divergence: if DuckDB ever starts dropping the
-    sign too, the class is dead and zero_audit can be relaxed —
+    sign too, the class is dead and the NEGZERO check can be relaxed —
     re-audit rather than silently drifting."""
     for x in WINDOW:
         (got,) = con.execute("SELECT round(?::DOUBLE, 6)", [x]).fetchone()

@@ -89,16 +89,47 @@ def test_parquet_expire(spark, tmp_path):
 
 
 def test_configured_builder_defaults():
-    from kairos_spark import configured_builder, default_shuffle_partitions
+    from kairos_spark import configured_builder, default_shuffle_partitions, local_builder
 
     b = configured_builder("t", cores=8)
     opts = b._options
     assert opts["spark.sql.session.timeZone"] == "UTC"
     assert opts["spark.sql.adaptive.enabled"] == "true"
     assert opts["spark.sql.shuffle.partitions"] == "8"
+    # the local builder sets exactly its contract and what the caller passed
+    assert local_builder("t", 3, "2g")._options == {
+        "spark.master": "local[3]",
+        "spark.app.name": "t",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": "3",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": "2g",
+    }
+    assert "spark.driver.memory" not in local_builder("t", 3)._options
     # 1 TB shuffle at 160 MB/partition ≈ 13k partitions (2x headroom)
     assert default_shuffle_partitions(1 << 40) == 2 * ((1 << 40) // (160 << 20) + 1)
     assert default_shuffle_partitions(0) == 8
+
+
+def test_session_builders_live_in_session_py():
+    """Every SparkSession in the repo starts from kairos_spark/session.py,
+    so the UTC contract and the local profile cannot drift per script."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    chain = re.compile(r"SparkSession\s*\.\s*builder")
+    offenders = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith(".")]
+        for f in files:
+            path = os.path.join(d, f)
+            rel = os.path.relpath(path, root)
+            if f.endswith(".py") and rel != os.path.join("kairos_spark", "session.py"):
+                with open(path, encoding="utf-8") as fh:
+                    if chain.search(fh.read()):
+                        offenders.append(rel)
+    assert offenders == []
 
 
 def test_bucketed_long_table_eliminates_shuffles(spark, tmp_path):

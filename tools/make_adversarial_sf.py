@@ -266,9 +266,10 @@ def make_events():
     # -1/(100·n_users) lies in (-5e-7, 0) and rounds to ZERO: the
     # signed ratio helpers' old `.otherwise(-mag)` emitted Spark -0.0
     # there while the oracle emits +0.0 — the value-hash split the
-    # local mirror masks (Python -0.0 == 0.0) but zero_audit and the
-    # driver see. Computed dynamically: existing variant-0 post cents
-    # are summed and cancelled, so the block survives fixture churn.
+    # oracle compare masks (Python -0.0 == 0.0) but the sweep's NEGZERO
+    # check and the driver see. Computed dynamically: existing
+    # variant-0 post cents are summed and cancelled, so the block
+    # survives fixture churn.
     # All rows sit strictly inside the span (min/max pins untouched)
     # and strictly AFTER the exact integer-µs midpoint bound; the
     # grand-mean padding below (pre-period by construction, asserted)

@@ -25,9 +25,8 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import bench
+from kairos_spark.session import local_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -41,16 +40,7 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=1)
     args = ap.parse_args()
 
-    builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("kairos_spark-opt-profile")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-    )
+    builder = local_builder("kairos_spark-opt-profile", CPUS, "16g")
     # ad-hoc conf overrides for A/B experiments: OPT_PROFILE_CONF is a
     # semicolon-separated k=v list applied on top of the bench config
     for kv in os.environ.get("OPT_PROFILE_CONF", "").split(";"):

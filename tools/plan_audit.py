@@ -14,9 +14,8 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from kairos_spark import queries as q
+from kairos_spark.session import local_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -1437,13 +1436,7 @@ def plan_text(df) -> str:
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = local_builder("kairos_spark-plan-audit", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     # Queries whose registered output frame is a LocalTableScan by
